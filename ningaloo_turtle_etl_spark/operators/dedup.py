@@ -215,7 +215,7 @@ def minhash_signature(shingle_col: Column, num_hashes: int = 32) -> Column:
     xxhash64(i, s). One array column of length ``num_hashes``; entirely
     JVM-side.
 
-    Measured decision (r06 A/B, scripts/ab_minhash.py, idle host, 3 reps):
+    Measured decision (r06 A/B, recorded in commit 490ca14; idle host, 3 reps):
     this per-slot form beats the r05 "hash-once + 2-universal integer
     slots" scheme ~1.5× end-to-end (3.37 s vs 5.22 s at 20k docs;
     1.57 s vs 1.77 s at 500 docs) — xxhash64 over short strings is a fused
@@ -426,7 +426,7 @@ def minhash_near_dup_pairs(
     # Signature per family: md5 derives slots from the already-hashed
     # shingle set (one digest per shingle, then integer min-folds —
     # DuckDB-reproducible, buys the oracle row); xxhash64 re-hashes the
-    # string per slot, which the r06 A/B (scripts/ab_minhash.py) measured
+    # string per slot, which the r06 A/B (see minhash_signature) measured
     # ~1.5× faster end-to-end than the integer-slot scheme AND slightly
     # higher recall. Both are computed in the SAME select as ``sh`` so the
     # string shingles never ride the cache — only (id, sh, sig) persists.
@@ -738,37 +738,6 @@ def token_hashes(text_col: Column | str, hash_family: str = "xxhash64") -> Colum
     if hash_family == "md5":
         return F.transform(tokens(text_col), lambda t: md5_hash60(t))
     return F.transform(tokens(text_col), lambda t: F.xxhash64(t))
-
-
-def simhash_from_hashes(hs: Column, num_bits: int = 64) -> Column:
-    """Signature from a MATERIALIZED token-hash array: bit b is set iff more
-    than half the token hashes have bit b set (⇔ the classic ±1 accumulator
-    is positive). ``num_bits`` `size(filter(...))` passes of pure bit-ops —
-    no per-token array allocation, which makes this the fastest Catalyst
-    form (measured 2.6s vs 3.8s HOF-aggregate vs 5.0s pandas-UDF per 20k
-    docs, signature stage only).
-
-    ``hs`` must be a projected column, not an inline expression: this
-    expression references it num_bits+1 times, and only an alias boundary
-    stops the hashing work being duplicated per reference (CollapseProject
-    will not inline non-cheap aliases with multiple uses)."""
-    nt = F.size(hs)
-
-    def bitcnt(b: int) -> Column:
-        return F.size(
-            F.filter(
-                hs, lambda x: F.shiftrightunsigned(x, b).bitwiseAND(F.lit(1)) == 1
-            )
-        )
-
-    sig = F.lit(0).cast("long")
-    for b in range(num_bits):
-        sig = sig.bitwiseOR(
-            F.when(2 * bitcnt(b) > nt, F.lit(_SIGN_MASKS[b]).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return F.coalesce(sig, F.lit(0).cast("long"))
 
 
 _SWAR_LANE = 0x0001000100010001  # one 1-bit per 16-bit lane

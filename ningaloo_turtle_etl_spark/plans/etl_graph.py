@@ -5,19 +5,25 @@
 
 Mirrors ningaloo-etl.Rmd end-to-end: every `write.csv` site becomes a product
 action; the QA section (:372-425) runs as rules and lands in the output as a
-machine-checkable report. One lazy DAG per product — Spark only materializes
-at the writes.
+machine-checkable report. One lazy DAG per product. The ten actions that
+materialize them (four QA checks, five CSV writes, the GeoJSON collect) are
+independent, so they are submitted together and Spark's scheduler runs their
+jobs side by side on the free cores.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from functools import partial
 from typing import Any
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 from ningaloo_turtle_etl_spark.operators.quality import (
     duplicated_key_rows,
@@ -32,6 +38,7 @@ from ningaloo_turtle_etl_spark.plans.products import (
     build_summary_nests,
     build_surveys,
 )
+from ningaloo_turtle_etl_spark.plans.qa_report import QaCheck, evaluate_check, write_qa_report
 from ningaloo_turtle_etl_spark.sources.files import write_csv
 from ningaloo_turtle_etl_spark.sources.geojson import (
     bbox_ring,
@@ -59,6 +66,12 @@ def run_batch_etl(
     ``inputs`` needs: raw_sites, area_surveyed, environment, species,
     raw_crawls, nests_joined (nest obs already carrying nest_type /
     species_name, per build_nests or a fixture).
+
+    The QA checks and, with ``write_products``, the five CSV writes and the
+    GeoJSON collect run as one concurrent action set (``_run_together``);
+    each action launches the same jobs it would alone, in the caller's job
+    group. The QA report files are written once every action has finished,
+    and the first failing action, in declared order, is re-raised.
     """
     sites = build_sites(inputs["raw_sites"])
     surveys = build_surveys(inputs["area_surveyed"], inputs["environment"], sites)
@@ -84,8 +97,6 @@ def run_batch_etl(
     # QA section (ningaloo-etl.Rmd:372-425) as a rendered run report:
     # the four reference checks, each with an optional expected count
     # (the reference's prose "we expect 22 NA crawls" as an assertion).
-    from ningaloo_turtle_etl_spark.plans.qa_report import QaCheck, run_qa, write_qa_report
-
     expected_qa = expected_qa or {}
     checks = [
         QaCheck(
@@ -116,13 +127,13 @@ def run_batch_etl(
             expected_qa.get("na_species_crawls"),
         ),
     ]
-    qa_detail = run_qa(checks)
-    qa = {name: r["count"] for name, r in qa_detail.items()}
-
+    actions = [partial(evaluate_check, c) for c in checks]
     if write_products:
         os.makedirs(out_dir, exist_ok=True)
-        for name, df in products.items():
-            write_csv(df, os.path.join(out_dir, f"{name}_csv"), single_file=True)
+        actions += [
+            partial(write_csv, df, os.path.join(out_dir, f"{name}_csv"), single_file=True)
+            for name, df in products.items()
+        ]
         geo = sites.withColumn(
             "feature",
             feature_json(
@@ -130,7 +141,15 @@ def run_batch_etl(
                 {"id": F.col("id"), "subsection": F.col("subsection")},
             ),
         )
-        write_feature_collection(geo, "feature", os.path.join(out_dir, "sites.geojson"))
+        actions.append(
+            partial(write_feature_collection, geo, "feature",
+                    os.path.join(out_dir, "sites.geojson"))
+        )
+    results = _run_together(sites.sparkSession, actions)
+    qa_detail = {c.name: r for c, r in zip(checks, results)}
+    qa = {name: r["count"] for name, r in qa_detail.items()}
+
+    if write_products:
         # Legacy flat counts (qa_report.json 'counts' mirrors this file's old
         # shape) plus the rendered human-readable report.
         with open(os.path.join(out_dir, "qa_report.json"), "w") as f:
@@ -138,6 +157,18 @@ def run_batch_etl(
         write_qa_report(qa_detail, out_dir, stem="qa_run_report")
 
     return EtlResult(products=products, qa=qa, out_dir=out_dir, qa_detail=qa_detail)
+
+
+def _run_together(spark: SparkSession, actions: list[Callable[[], Any]]) -> list[Any]:
+    """Run every action on its own thread and return their results in order,
+    once all have finished; the first failure in list order is re-raised.
+
+    Each action is wrapped separately: the wrapper copies the caller's local
+    properties (job group, scheduler pool) once, and threads that shared one
+    copy would see each other's SQL execution ids."""
+    with ThreadPoolExecutor(max_workers=len(actions)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(a)) for a in actions]
+    return [f.result() for f in futures]
 
 
 def publish_products(result: EtlResult, catalogue: Any) -> None:

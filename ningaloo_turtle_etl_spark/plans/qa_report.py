@@ -36,24 +36,21 @@ class QaCheck:
     expected: int | None = None
 
 
-def run_qa(checks: list[QaCheck], sample_rows: int = 5) -> dict:
-    """Evaluate every check once: violation count, ok-vs-expected, and up to
-    ``sample_rows`` example violations (stringified for JSON portability)."""
-    results: dict[str, dict] = {}
-    for c in checks:
-        count = c.violations.count()
-        sample = [
-            {k: (None if v is None else str(v)) for k, v in row.asDict().items()}
-            for row in c.violations.limit(sample_rows).collect()
-        ]
-        results[c.name] = {
-            "description": c.description,
-            "count": count,
-            "expected": c.expected,
-            "ok": (count == c.expected) if c.expected is not None else (count == 0),
-            "sample": sample,
-        }
-    return results
+def evaluate_check(c: QaCheck, sample_rows: int = 5) -> dict:
+    """One check's violation count, ok-vs-expected, and up to ``sample_rows``
+    example violations (stringified for JSON portability)."""
+    count = c.violations.count()
+    sample = [
+        {k: (None if v is None else str(v)) for k, v in row.asDict().items()}
+        for row in c.violations.limit(sample_rows).collect()
+    ]
+    return {
+        "description": c.description,
+        "count": count,
+        "expected": c.expected,
+        "ok": (count == c.expected) if c.expected is not None else (count == 0),
+        "sample": sample,
+    }
 
 
 def render_markdown(results: dict, title: str = "QA run report") -> str:

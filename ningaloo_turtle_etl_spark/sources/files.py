@@ -27,8 +27,12 @@ def write_csv(df: DataFrame, path: str, single_file: bool = False, **options) ->
     """S6: CSV product sink (`write.csv(x, file, row.names=F)`).
 
     ``single_file=True`` coalesces to one partition for parity with the
-    reference's one-file products — only sane for dimension/summary-sized
-    output. Fact-scale data stays multi-part (one file per partition)."""
+    reference's one-file products. ``coalesce(1)`` is a narrow dependency,
+    so it folds the product's whole upstream stage (scan, joins, encode)
+    into one task, not just the write: only sane for dimension/summary-sized
+    output. The other cores only do useful work when other actions run
+    beside it, as in run_batch_etl (plans/etl_graph.py). Fact-scale data
+    stays multi-part (one file per partition)."""
     out = df.coalesce(1) if single_file else df
     opts = {"header": "true"} | options
     out.write.options(**opts).mode("overwrite").csv(path)
@@ -88,9 +92,10 @@ def read_jsonl(
 
 
 def write_jsonl(df: DataFrame, path: str, single_file: bool = False, **options) -> None:
-    """JSON-Lines sink: one JSON object per line, one file per partition
-    (``single_file=True`` coalesces — dimension-sized output only, same
-    caveat as write_csv)."""
+    """JSON-Lines sink: one JSON object per line, one file per partition.
+    ``single_file=True`` coalesces, which runs the whole upstream stage
+    (scan, joins, encode) as one task, not just the write: dimension-sized
+    output only, same caveat as write_csv."""
     out = df.coalesce(1) if single_file else df
     out.write.options(**options).mode("overwrite").json(path)
 

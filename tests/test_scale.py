@@ -73,12 +73,9 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
         spark.sql("DROP TABLE bucketed_b")
 
 
-def test_etl_graph_end_to_end(spark, tmp_path):
-    import json
-
-    from ningaloo_turtle_etl_spark.plans.etl_graph import publish_products, run_batch_etl
-    from ningaloo_turtle_etl_spark.sources.catalogue import Catalogue
-
+def _etl_inputs(spark):
+    """Two sites (one missing a bbox corner), one survey, one orphan crawl,
+    one NA-species crawl."""
     raw_sites = spark.createDataFrame(
         [
             (1, "Ningaloo", "North", "Red Bluff", -23.0, 113.0, -22.9, -23.1, 113.0, 112.9),
@@ -103,17 +100,25 @@ def test_etl_graph_end_to_end(spark, tmp_path):
         "nest_id long, survey_id long, nest_type string, species_name string,"
         " date string, subsection string",
     )
+    return {
+        "raw_sites": raw_sites,
+        "area_surveyed": area,
+        "environment": env,
+        "species": species,
+        "raw_crawls": crawls,
+        "nests_joined": nests_joined,
+    }
+
+
+def test_etl_graph_end_to_end(spark, tmp_path):
+    import json
+
+    from ningaloo_turtle_etl_spark.plans.etl_graph import publish_products, run_batch_etl
+    from ningaloo_turtle_etl_spark.sources.catalogue import Catalogue
 
     out = str(tmp_path / "products")
     result = run_batch_etl(
-        {
-            "raw_sites": raw_sites,
-            "area_surveyed": area,
-            "environment": env,
-            "species": species,
-            "raw_crawls": crawls,
-            "nests_joined": nests_joined,
-        },
+        _etl_inputs(spark),
         out_dir=out,
         expected_qa={
             "duplicated_sites": 0,
@@ -148,6 +153,76 @@ def test_etl_graph_end_to_end(spark, tmp_path):
     cat = Catalogue({}, staging_dir=str(tmp_path / "stage"))
     publish_products(result, cat)
     assert "sites_geojson" in cat.published and "surveys" in cat.published
+
+
+def _job_in_new_group(spark, group: str) -> int:
+    """Run one single-task job under ``group`` and return its id once the
+    status tracker, which is fed asynchronously, has recorded it."""
+    import time
+
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + 30
+    while not (ids := sc.statusTracker().getJobIdsForGroup(group)):
+        assert time.monotonic() < deadline, f"status tracker never saw {group}"
+        time.sleep(0.05)
+    return max(ids)
+
+
+def test_etl_graph_jobs_stay_in_callers_job_group(spark, tmp_path):
+    """The concurrent action set runs on worker threads; every job they
+    launch must still carry the caller's job group."""
+    from ningaloo_turtle_etl_spark.plans.etl_graph import run_batch_etl
+
+    sc = spark.sparkContext
+    first = _job_in_new_group(spark, "etl-probe-before")
+    sc.setJobGroup("etl-probe", "run_batch_etl")
+    try:
+        run_batch_etl(_etl_inputs(spark), str(tmp_path / "products"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    last = _job_in_new_group(spark, "etl-probe-after")
+
+    launched = set(range(first + 1, last))
+    assert launched, "run_batch_etl launched no Spark job"
+    assert set(sc.statusTracker().getJobIdsForGroup("etl-probe")) == launched
+
+
+def test_etl_graph_keeps_check_order_and_reraises_first_failure(
+    spark, tmp_path, monkeypatch
+):
+    import json
+    import time
+
+    from ningaloo_turtle_etl_spark.plans import etl_graph
+
+    order = ["duplicated_sites", "sites_missing_coords", "orphan_crawls", "na_species_crawls"]
+    out = tmp_path / "ok"
+    result = etl_graph.run_batch_etl(_etl_inputs(spark), str(out))
+    assert list(result.qa_detail) == order
+    assert list(json.loads((out / "qa_run_report.json").read_text())["checks"]) == order
+
+    # Two products fail; the one declared first fails last in time, and it
+    # is still the error that surfaces.
+    real_write_csv = etl_graph.write_csv
+
+    def write_csv(df, path, **options):
+        if path.endswith("/surveys_csv"):
+            time.sleep(0.5)
+            raise RuntimeError("surveys write failed")
+        if path.endswith("/summary_nests_csv"):
+            raise RuntimeError("summary_nests write failed")
+        real_write_csv(df, path, **options)
+
+    monkeypatch.setattr(etl_graph, "write_csv", write_csv)
+    bad = tmp_path / "bad"
+    with pytest.raises(RuntimeError, match="surveys write failed"):
+        etl_graph.run_batch_etl(_etl_inputs(spark), str(bad))
+    assert not (bad / "qa_run_report.json").exists()
 
 
 def test_key_skew_profile_hand_distribution(spark):
